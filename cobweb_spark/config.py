@@ -95,9 +95,14 @@ class CrawlConfig:
     # persist narrow (meta, spans) projections of the corpus for the
     # per-wave joins; disable when the corpus doesn't fit executor storage
     cache_corpus: bool = True
-    # precompute the whole corpus' link extraction ONCE (one mapInPandas
-    # pass) and expand waves by joining the narrow cached edge table,
-    # instead of re-joining + re-extracting span arrays per wave. The
+    # precompute the whole corpus' link extraction and classification
+    # ONCE (one mapInPandas pass) into the dictionary edge table — 8-byte
+    # (src_key, dst_key, position) rows plus one (link, host) entry per
+    # distinct link — and expand waves by joining it, instead of
+    # re-joining + re-extracting span arrays per wave. Applies when the
+    # classifier is static (no crawl_linked_external, no first-page
+    # redirect widening), store_inbound_links is off and slim_expand is
+    # on; any other configuration extracts from spans per wave. The
     # right trade when the crawl covers a large fraction of the corpus
     # (nested-array scans per wave dominate otherwise); leave False when
     # crawling a small slice of a huge corpus.
@@ -112,16 +117,10 @@ class CrawlConfig:
     # sandbox scale — the same keying the north rule specifies for the
     # bloom/cuckoo membership tier. Set False for string-exact mode.
     slim_expand: bool = True
-    # snapshot/resume
+    # snapshot/resume: the crawler takes a SnapshotStore
+    # (SparkCrawler(snapshot_store=...)), which commits every completed
+    # wave on a background FIFO worker while the next wave computes
     state_dir: str | None = None
-    checkpoint_every: int = 1  # waves between snapshot commits
-    # pipeline snapshot commits on a background thread: wave N+1's compute
-    # overlaps wave N's durable write (every commit input is an immutable
-    # checkpointed plan, so the write is race-free; a single FIFO worker
-    # preserves the _LATEST ordering and errors fail the crawl at the
-    # next wave boundary). The filter bank is the one mutable input —
-    # it is staged synchronously before enqueue.
-    async_commits: bool = True
     max_waves: int = 10_000
 
     def resolved_internal_urls(self, base_url: str | None) -> list[str]:

@@ -86,7 +86,9 @@ class SeenFilterBank:
         scratch_dir: str | None = None,
     ):
         import os
+        import shutil
         import tempfile
+        import weakref
 
         self.spark = spark
         self.n_shards = n_shards
@@ -98,6 +100,12 @@ class SeenFilterBank:
                 "/dev/shm" if os.path.isdir("/dev/shm") else None,
             )
             scratch_dir = tempfile.mkdtemp(prefix="seenbank-", dir=base)
+            # a bank nobody close()s must not leak its scratch: remove the
+            # directory when the bank is collected or the interpreter
+            # exits (a caller's scratch_dir stays the caller's)
+            weakref.finalize(
+                self, shutil.rmtree, scratch_dir, ignore_errors=True
+            )
         self._scratch = scratch_dir
         self._gen = 0
         self.filters = spark.createDataFrame([], FILTERS_SCHEMA)

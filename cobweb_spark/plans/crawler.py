@@ -9,13 +9,18 @@ Each wave (SURVEY §3.5):
     → intra-wave first-discovery window → discovery_order assignment
     → frontier := deferred ∪ new links; seen += new links
 
+Links come from one of two places: the dictionary edge table built once
+per crawler (``_ensure_edges``; static classifier, no inbound-link stream)
+or, for every other configuration, a per-wave span join + extraction.
+
 Iteration is feedback (wave N output is wave N+1 input), which a single
 Catalyst plan cannot express — hence the driver loop, with per-wave
-``localCheckpoint`` (or snapshot commit when ``state_dir`` is set) to cut
-lineage, the Spark analogue of the reference's unbounded job recursion
-(``lib/crawl_job.rb:24-32,107-113``). Exactly-once finish/resume comes from
-atomic per-wave snapshot commits instead of the reference's Redis
-WATCH/MULTI + setnx locks (``lib/crawl.rb:241-291``).
+``localCheckpoint`` to cut lineage, the Spark analogue of the reference's
+unbounded job recursion (``lib/crawl_job.rb:24-32,107-113``). With a
+snapshot store, every completed wave is committed through the background
+``CommitPipeline``; exactly-once finish/resume comes from those atomic
+per-wave commits instead of the reference's Redis WATCH/MULTI + setnx
+locks (``lib/crawl.rb:241-291``).
 """
 
 from __future__ import annotations
@@ -89,6 +94,28 @@ class SparkCrawlResult:
         ]
 
 
+def link_dictionary(keyed: DataFrame) -> DataFrame:
+    """dst_key → link over the rows of ``keyed`` (dst_key, link, is_link),
+    with a ``clash`` flag set where two distinct strings share the key.
+
+    Rows with ``is_link`` false are the other strings that share the key
+    space (seeds, doc_ids): a link colliding with one of them is flagged
+    too, but their own keys get no row. min(link) ≠ max(link) per key is
+    the check — it rides the dedup aggregation the dictionary needs
+    anyway, so it costs no extra job.
+    """
+    return (
+        keyed.groupBy("dst_key")
+        .agg(
+            F.min("link").alias("link"),
+            (F.min("link") != F.max("link")).alias("clash"),
+            F.max("is_link").alias("is_link"),
+        )
+        .filter("is_link")
+        .drop("is_link")
+    )
+
+
 _AUTO = object()  # sentinel: build the prefilter from config
 
 
@@ -153,12 +180,14 @@ class SparkCrawler:
         # slower than a pruned vectorized parquet read
         self._spans = documents.select("doc_id", "spans")
         self._n_part = n_part
-        # the precomputed edge table is built lazily at crawl start (it
+        # the dictionary edge table is built lazily at crawl start (it
         # needs the crawl's classifier to hoist per-wave work; see
         # _ensure_edges)
-        self._edges_sel = None
-        self._edges_static = False
-        self._edge_dict = None  # dst_key → (link, host) dictionary
+        self._edges = None  # (src_key, dst_key, position)
+        self._edge_dict = None  # dst_key → (link, host, clash) dictionary
+        # False once two distinct URLs were found to share an xxhash64
+        # link key: this crawler then keys dedup and rejection on strings
+        self._link_keys_exact = True
         self._has_redirects: bool | None = None
         self.robots = robots
         self._robots_compiled = None
@@ -195,7 +224,7 @@ class SparkCrawler:
         before timing unrelated work in the same session — leaving GBs of
         cached relations resident makes later measurements observe GC
         pressure instead of the operator under test."""
-        for df in (self._meta, self._edges_sel, self._edge_dict):
+        for df in (self._meta, self._edges, self._edge_dict):
             try:
                 if df is not None:
                     df.unpersist()
@@ -220,27 +249,45 @@ class SparkCrawler:
             )
         return self._has_redirects
 
-    def _ensure_edges(self, classifier, base_url) -> None:
-        """Build the precomputed edge table (one extraction pass over the
-        corpus) on first use, hoisting every wave-independent stage out of
-        the per-wave loop.
+    def _ensure_edges(self, classifier, seen: DataFrame) -> None:
+        """Build the dictionary edge table on first use: one extraction
+        pass over the corpus with every wave-independent stage hoisted
+        into it — link extraction, the whole internal/external
+        classification (with its https→http rewrite), the link host and
+        both 8-byte keys. Waves then do no regex and no Python work on the
+        candidate stream.
 
-        Always hoisted: link extraction, the https→http rewrite, the host
-        computation (on the rewritten form — what the frontier stores),
-        and the 8-byte src_key. Additionally hoisted when the classifier
-        cannot change mid-crawl (no first-page-redirect widening possible,
-        no parent-dependent crawl_linked_external disjunct): the whole
-        internal/external classification — per-wave expansion then does no
-        regex work at all. The cached table is (src_key, link, host,
-        position): link strings are the output, everything else is fixed
-        width.
+        Layout (guide §8 "decide with small rows, move big rows once"):
+        the per-wave table holds fixed-width (src_key, dst_key, position)
+        longs ≈ 20 B/row, and the (link, host) strings live once per
+        DISTINCT link in a dst_key-keyed dictionary. Dedup and the seen
+        anti-join chain move 8-byte keys with a string-free payload, and
+        (link, host) re-attach to the ~|new links| survivors in one join.
+
+        Built only when the classifier cannot change mid-crawl (no
+        parent-dependent crawl_linked_external disjunct, no first-page
+        redirect widening), no inbound-link candidate stream is kept and
+        links are keyed (slim_expand). Every other configuration extracts
+        from spans per wave.
+
+        ``dst_key`` doubles as the slim ``link_key``, so an xxhash64
+        collision would silently merge two links. The dictionary build
+        checks it: if two distinct strings among the links, the crawl's
+        starting ``seen`` set (the seeds, or a resumed crawl's seen
+        table) and the doc_ids share a key, the table is dropped and this
+        crawler keys on URL strings instead (as ``_key_join`` does for
+        doc keys).
         """
-        if self._edges_sel is not None:
-            return
         cfg = self.cfg
-        static_ok = not cfg.crawl_linked_external and not (
-            cfg.first_page_redirect_internal and self._probe_redirects()
-        )
+        if self._edges is not None or not self._link_keys_exact:
+            return
+        if (
+            not cfg.slim_expand
+            or cfg.store_inbound_links
+            or cfg.crawl_linked_external
+            or (cfg.first_page_redirect_internal and self._probe_redirects())
+        ):
+            return
         ex_in = self.documents.select(
             F.col("doc_id").alias("parent"),
             F.col("doc_id").alias("parent_url"),
@@ -248,76 +295,64 @@ class SparkCrawler:
             F.lit(0).alias("parent_depth"),
             "spans",
         )
-        raw = extract_links(ex_in, cfg.kind_categories())
+        raw = select_internal(
+            extract_links(ex_in, cfg.kind_categories()), classifier, cfg
+        )  # rewrites link
         src_key = (
             F.xxhash64("parent_url")
             if self._key_join
             else F.col("parent_url")
         )
-        # dictionary layout (round 7, guide §8 "decide with small rows,
-        # move big rows once"): when classification is hoisted AND the
-        # expand path already keys on xxhash64(link) (slim_expand — the
-        # same collision bound), the cached per-wave table stores only
-        # fixed-width longs (src_key, dst_key, position) ≈ 20 B/row, and
-        # the (link, host) strings live once per DISTINCT link in a
-        # dst_key-keyed dictionary. Every wave then: probes a ~5x smaller
-        # cache, dedups and anti-joins on 8-byte keys with a string-free
-        # payload, and re-attaches (link, host) to the ~|new links|
-        # survivors in one join — measured round-start: the string-bearing
-        # variants of these stages shuffled 205-342 MB/wave and spent
-        # 40-93 s/stage in GC (BENCH/r07/waveprof_pre1.json); the host
-        # UDF also now runs over |distinct links| rows, not |edges|.
-        use_dict = static_ok and bool(cfg.slim_expand) and (
-            not cfg.store_inbound_links
-        )
-        if use_dict:
-            raw = select_internal(raw, classifier, cfg)  # rewrites link
-            keyed = raw.select(
+        # every other string a seen part can hold: the starting seen set,
+        # and the doc_ids that redirect finals resolve to
+        others = self.documents.select(
+            F.col("doc_id").alias("link")
+        ).unionByName(seen.select(F.col("url").alias("link")))
+        keyed = (
+            raw.select(
                 src_key.alias("src_key"),
                 F.xxhash64("link").alias("dst_key"),
                 "position",
                 "link",
-            ).persist()
-            self._edges_sel = (
-                keyed.select("src_key", "dst_key", "position")
-                .repartition(self._n_part, "src_key")
-                .persist()
+                F.lit(True).alias("is_link"),
             )
-            self._edge_dict = (
-                keyed.select("dst_key", "link")
-                .dropDuplicates(["dst_key"])
-                .withColumn("host", host_udf("link"))
-                .repartition(self._n_part, "dst_key")
-                .persist()
+            .unionByName(
+                others.select(
+                    F.xxhash64("link").alias("dst_key"),
+                    "link",
+                    F.lit(False).alias("is_link"),
+                ),
+                allowMissingColumns=True,
             )
-            # materialize both derived caches, then release the scratch
-            # (one extraction pass total; the scratch would otherwise pin
-            # ~|edges| link strings for the whole crawl)
-            self._edges_sel.count()
-            self._edge_dict.count()
-            keyed.unpersist()
-            self._edges_static = True
-            return
-        if static_ok:
-            raw = select_internal(raw, classifier, cfg)  # rewrites link
-            link_n = F.col("link")
-        elif cfg.treat_https_as_http:
-            # classification must see the raw link per wave; host is of
-            # the rewritten form (what select_internal will emit)
-            link_n = F.regexp_replace("link", "^https", "http")
-        else:
-            link_n = F.col("link")
-        self._edges_sel = (
-            raw.select(
-                src_key.alias("src_key"),
-                "link",
-                host_udf(link_n).alias("host"),
-                "position",
-            )
+            .persist()
+        )
+        edges = (
+            keyed.filter("is_link")
+            .select("src_key", "dst_key", "position")
             .repartition(self._n_part, "src_key")
             .persist()
         )
-        self._edges_static = static_ok
+        dictionary = (
+            link_dictionary(keyed.select("dst_key", "link", "is_link"))
+            .withColumn("host", host_udf("link"))
+            .repartition(self._n_part, "dst_key")
+            .persist()
+        )
+        # materialize both derived caches (the collision sum is the
+        # dictionary's materializing job), then release the scratch (one
+        # extraction pass total; the scratch would otherwise pin ~|edges|
+        # link strings for the whole crawl)
+        edges.count()
+        (n_clash,) = dictionary.agg(
+            F.sum(F.col("clash").cast("long"))
+        ).collect()[0]
+        keyed.unpersist()
+        if n_clash:
+            edges.unpersist()
+            dictionary.unpersist()
+            self._link_keys_exact = False
+            return
+        self._edges, self._edge_dict = edges, dictionary
 
     # ------------------------------------------------------------------
     def crawl(
@@ -368,31 +403,6 @@ class SparkCrawler:
         # full-set distinct exchange
         finals_probe_parts: list[DataFrame] = []
 
-        # slim expand path (cfg.slim_expand): dedup + seen-rejection key
-        # on xxhash64(link); the LSM parts are 8-byte key frames and the
-        # parent-URL string never rides the expand shuffles (resolved
-        # from the wave's pages by fetch_order at frontier emission)
-        slim = bool(cfg.slim_expand)
-        part_col = "link_key" if slim else "link"
-
-        def _as_part(df: DataFrame, col: str = "url") -> DataFrame:
-            """Hash-partition + checkpoint one seen part (one column:
-            ``link`` string, or its 8-byte ``link_key`` in slim mode).
-
-            The parts LSM: reject_seen chains left_anti joins over these,
-            shuffling the candidate side once and the parts never (their
-            partitioning survives the checkpoint)."""
-            proj = (
-                F.xxhash64(F.col(col)).alias("link_key")
-                if slim
-                else F.col(col).alias("link")
-            )
-            return (
-                df.select(proj)
-                .repartition(self._n_part, part_col)
-                .localCheckpoint(eager=False)
-            )
-
         latest = self.store.latest_wave() if (resume and self.store) else None
         if latest is not None:
             # exact resume: reload committed state and replay from wave k+1
@@ -404,7 +414,6 @@ class SparkCrawler:
             # the stored seen table is the raw lazy union (may hold a
             # redirect-final duplicate) — the result must re-distinct
             seen_may_dup = True
-            seen_parts = [_as_part(seen)]
             pages_parts = self.store.load_parts(latest, "pages")
             cand_parts = self.store.load_parts(latest, "candidates")
             edge_parts = self.store.load_parts(latest, "edges")
@@ -435,7 +444,6 @@ class SparkCrawler:
             frontier = self._seed_frontier(base_url).localCheckpoint()
             seen = frontier.select("url").localCheckpoint()
             seen_may_dup = False
-            seen_parts = [_as_part(seen)]
             n_fetched = 0
             next_order = frontier.count()
             pages_counted = 0
@@ -443,43 +451,52 @@ class SparkCrawler:
             waves_done = 0
             bank_lagging = True
             bank_synced_parts = 0
+        if cfg.precompute_edges:
+            # one extraction pass over the corpus, with every
+            # wave-independent stage hoisted into it (when the classifier
+            # is provably static; otherwise waves extract from spans)
+            self._ensure_edges(classifier, seen)
+        use_edges = self._edges is not None
+
+        # slim expand path (cfg.slim_expand): dedup + seen-rejection key
+        # on xxhash64(link); the LSM parts are 8-byte key frames and the
+        # parent-URL string never rides the expand shuffles (resolved
+        # from the wave's pages by fetch_order at frontier emission).
+        # A link-key collision found by the edge build forces strings.
+        slim = bool(cfg.slim_expand) and self._link_keys_exact
+        part_col = "link_key" if slim else "link"
+        # the seen-part LSM: reject_seen chains left_anti joins over these
+        # hash-partitioned checkpointed parts, shuffling the candidate side
+        # once and the parts never (their partitioning survives the
+        # checkpoint)
+        seen_parts = [
+            seen.select(
+                F.xxhash64("url").alias("link_key")
+                if slim
+                else F.col("url").alias("link")
+            )
+            .repartition(self._n_part, part_col)
+            .localCheckpoint(eager=False)
+        ]
         empty_frontier = frontier.limit(0)
         # n_frontier tracks |frontier| so the loop head needs no isEmpty job
         n_frontier = frontier.count() if latest is not None else next_order
-        # cancel-drain bookkeeping: the last committed snapshot wave, and
-        # the last wave's (checkpointed) outputs so a cancel between sparse
-        # snapshots can seal the current state without recomputing anything
-        last_snap = latest if latest is not None else -1
-        last_cut = last_edges = last_cands = None
-        last_counters: dict = {}
 
         import functools
         import time as _time
 
         t_started = _time.time()
 
-        # async commit pipeline: wave N+1 computes while wave N's snapshot
-        # writes drain on a single FIFO worker (plans/state.py). Every
-        # per-wave store call below routes through _commit; the pipeline
-        # is drained before any post-loop store read/write so resume and
-        # exactly-once semantics are byte-identical to the sync path.
+        # commit pipeline: every completed wave is committed, and wave N+1
+        # computes while wave N's snapshot writes drain on a single FIFO
+        # worker (plans/state.py). The pipeline is closed before any
+        # post-loop store write, so resume and exactly-once semantics see
+        # every wave's commit in order.
         committer = None
-        if self.store is not None and cfg.async_commits:
+        if self.store is not None:
             from .state import CommitPipeline
 
             committer = CommitPipeline()
-
-        def _commit(fn, *a, **kw):
-            if committer is None:
-                fn(*a, **kw)
-            else:
-                committer.submit(functools.partial(fn, *a, **kw))
-
-        if cfg.precompute_edges:
-            # one extraction pass over the corpus, with every
-            # wave-independent stage (and, when the classifier is
-            # provably static, the whole classification) hoisted into it
-            self._ensure_edges(classifier, base_url)
 
         cancelled = False
         try:
@@ -690,25 +707,24 @@ class SparkCrawler:
                     F.col("fetch_order").alias("parent_fetch_order"),
                     F.col("depth").alias("parent_depth"),
                 )
-                if self._edges_sel is not None:
+                if use_edges:
+                    # dictionary layout: classification was hoisted into the
+                    # edge build, and the probe emits dst_key — that IS the
+                    # slim link_key (xxhash64 of the rewritten link); the
+                    # (link, host) strings rejoin after the dedup +
+                    # anti-join chain
                     pk = (
                         F.xxhash64("parent_url")
                         if self._key_join
                         else F.col("parent_url")
                     )
                     wv = to_extract.withColumn("__pk", pk)
-                    candidates = wv.join(
-                        self._edges_sel,
-                        wv["__pk"] == self._edges_sel["src_key"],
-                    ).drop("__pk", "src_key")
-                    if self._edge_dict is not None:
-                        # dictionary layout: the probe emitted dst_key —
-                        # that IS the slim link_key (xxhash64 of the
-                        # rewritten link); the string columns rejoin after
-                        # the dedup + anti-join chain
-                        candidates = candidates.withColumnRenamed(
-                            "dst_key", "link_key"
-                        )
+                    ed = self._edges
+                    selected = (
+                        wv.join(ed, wv["__pk"] == ed["src_key"])
+                        .drop("__pk", "src_key", "parent_url")
+                        .withColumnRenamed("dst_key", "link_key")
+                    )
                 else:
                     # stream the spans scan against a broadcast of the wave:
                     # the corpus side must never be shuffled or broadcast.
@@ -725,43 +741,30 @@ class SparkCrawler:
                         spans_src.doc_id == to_extract.parent_url,
                         "inner",
                     ).drop("doc_id")
-                    candidates = extract_links(with_spans, cfg.kind_categories())
-                # parent_url was the join key's source; nothing downstream
-                # reads it — dropping it here keeps a 40+-byte string out of
-                # the dedup shuffle and the checkpointed candidate stream
-                candidates = candidates.drop("parent_url")
-                if cfg.store_inbound_links:
-                    # inbound indexing needs the raw candidate stream twice —
-                    # materialize; otherwise let it flow straight through
-                    candidates = candidates.localCheckpoint()
-                    cand_parts.append(
-                        candidates.drop("host")
-                        if "host" in candidates.columns
-                        else candidates
-                    )
-
-                _t_sel = _time.time()
-                if self._edges_sel is not None and self._edges_static:
-                    # classification was hoisted into the edge table build
-                    selected = candidates
-                else:
-                    selected = select_internal(candidates, classifier, cfg)
-                if self._edge_dict is None:
-                    # dictionary layout defers the robots gate to AFTER
-                    # dedup + seen rejection: the allow/disallow predicate
-                    # is a function of the link alone, so filtering the
-                    # ~|new links| survivors is exactly equivalent to
-                    # filtering every candidate — and evaluates the rules
-                    # once per unique link instead of once per edge
+                    # parent_url was the join key's source; nothing
+                    # downstream reads it — dropping it here keeps a
+                    # 40+-byte string out of the dedup shuffle and the
+                    # checkpointed candidate stream
+                    candidates = extract_links(
+                        with_spans, cfg.kind_categories()
+                    ).drop("parent_url")
+                    if cfg.store_inbound_links:
+                        # inbound indexing needs the raw candidate stream
+                        # twice — materialize; otherwise let it flow
+                        # straight through
+                        candidates = candidates.localCheckpoint()
+                        cand_parts.append(candidates)
                     selected = robots_gate(
-                        selected,
+                        select_internal(candidates, classifier, cfg),
                         self.robots,
                         cfg,
                         compiled=self._robots_compiled,
-                        host_col=(
-                            "host" if self._edges_sel is not None else None
-                        ),
                     )
+                    if slim:
+                        selected = selected.withColumn(
+                            "link_key", F.xxhash64("link")
+                        )
+                _t_sel = _time.time()
                 # dedup BEFORE the anti-join: map-side combine collapses the
                 # duplicate-heavy candidate stream to unique links, so the
                 # anti-join (and everything after) touches ~|new links| rows.
@@ -773,13 +776,7 @@ class SparkCrawler:
                 # SLOWER: the resolution join adds a full exchange of the
                 # new-link stream, which outweighs the ~30-byte strings it
                 # removes — see BENCH/BASELINE.md round-5.)
-                if slim and self._edge_dict is None:
-                    selected = selected.withColumn(
-                        "link_key", F.xxhash64("link")
-                    )
-                fresh = first_discovery_wins(
-                    selected, key_col="link_key" if slim else "link"
-                )
+                fresh = first_discovery_wins(selected, key_col=part_col)
                 # bloom tier engages once seen is big enough to out-cost the
                 # probe (config.prefilter_min_seen); the bank itself is kept
                 # current every wave either way, so engagement is seamless.
@@ -842,16 +839,19 @@ class SparkCrawler:
                     miss_backstop=backstop,
                     key_col=part_col,
                 )
-                if self._edge_dict is not None:
+                if use_edges:
                     # dictionary layout: everything upstream moved 8-byte
                     # keys; re-attach (link, host) to the ~|new links|
                     # survivors in one equi-join against the cached
                     # dictionary (guide §8 — the heavy strings move once),
-                    # then apply the deferred robots gate on unique links
+                    # then apply the robots gate: the allow/disallow
+                    # predicate is a function of the link alone, so gating
+                    # the unique survivors is exactly equivalent to gating
+                    # every candidate, and evaluates the rules once per link
                     ed = self._edge_dict
                     fresh = fresh.join(
                         ed, fresh["link_key"] == ed["dst_key"]
-                    ).drop("dst_key")
+                    ).drop("dst_key", "clash")
                     fresh = robots_gate(
                         fresh,
                         self.robots,
@@ -878,9 +878,7 @@ class SparkCrawler:
                 # the checkpoint inside its own job: one less serial job per
                 # wave with no python-stage stacking to fear.
                 if not engaged:
-                    fresh = fresh.localCheckpoint(
-                        eager=self._edges_sel is None
-                    )
+                    fresh = fresh.localCheckpoint(eager=not use_edges)
                 _t_flag = _time.time()
                 # parent_fetch_order spans exactly [n_fetched - n_cut,
                 # n_fetched) in EVERY admission mode (plain BFS: frontier
@@ -912,7 +910,7 @@ class SparkCrawler:
                     start=next_order,
                 )
 
-                # precompute path: lazy — the only deferred stages are the
+                # edges path: lazy — the only deferred stages are the
                 # order-assignment mapInPandas and a projection (no Python
                 # UDFs left), and the next wave's first job materializes the
                 # checkpoint, saving one job per wave of the serial floor.
@@ -921,14 +919,12 @@ class SparkCrawler:
                 new_frontier = fresh.select(
                     F.col("link").alias("url"),
                     (
-                        F.col("host")
-                        if self._edges_sel is not None
-                        else host_udf("link")
+                        F.col("host") if use_edges else host_udf("link")
                     ).alias("host"),
                     (F.col("parent_depth") + 1).alias("depth"),
                     "discovery_order",
                     F.col("parent").alias("parent"),
-                ).localCheckpoint(eager=self._edges_sel is None)
+                ).localCheckpoint(eager=not use_edges)
                 next_order += n_new
 
                 _t_zip = _time.time()
@@ -1008,79 +1004,61 @@ class SparkCrawler:
                     frontier = new_frontier
                     n_frontier = n_new
 
-                if self.store is not None:
-                    # dictionary layout never carries a link-string
-                    # candidate stream (store_inbound_links is off in that
-                    # mode) — commit no candidates table rather than a
-                    # key-shaped one a resume could misread
-                    cand_commit = (
-                        None if self._edge_dict is not None else candidates
+                if committer is not None:
+                    committer.submit(
+                        functools.partial(
+                            self.store.append_wave_metrics, metrics[-1]
+                        )
                     )
-                    last_cut, last_edges, last_cands = (
-                        cut,
-                        edges_wave,
-                        cand_commit,
-                    )
-                    last_counters = {
-                        "n_fetched": n_fetched,
-                        "next_order": next_order,
-                        "pages_counted": pages_counted,
-                        "extra_internal": extra_internal,
-                        # resume may trust the saved bank only if it covers
-                        # EVERY part (amortized maintenance can lag)
-                        "bank_synced": (not bank_lagging)
-                        and bank_synced_parts >= len(seen_parts),
-                    }
-                    _commit(self.store.append_wave_metrics, metrics[-1])
-                    if limit_hit or wave % max(cfg.checkpoint_every, 1) == 0:
-                        # the bank is the one commit input the NEXT wave
-                        # mutates: stage it synchronously at the boundary,
-                        # the pipeline adopts the staged dir by rename
-                        filters_dir = None
-                        if committer is not None and self.prefilter is not None:
-                            filters_dir = os.path.join(
-                                self.store.dir, f"_filters_stage-{wave:06d}"
-                            )
-                            self.prefilter.save(filters_dir)
-                        _commit(
+                    # the bank is the one commit input the NEXT wave
+                    # mutates: stage it synchronously at the boundary,
+                    # the pipeline adopts the staged dir by rename
+                    filters_dir = None
+                    if self.prefilter is not None:
+                        filters_dir = os.path.join(
+                            self.store.dir, f"_filters_stage-{wave:06d}"
+                        )
+                        self.prefilter.save(filters_dir)
+                    committer.submit(
+                        functools.partial(
                             self.store.commit_wave,
                             wave_id=wave,
                             frontier=frontier,
                             seen=seen,
                             pages=cut,
                             edges=edges_wave,
-                            candidates=cand_commit,
-                            counters=last_counters,
-                            metrics=metrics[-1],
-                            filters_bank=(
-                                self.prefilter if committer is None else None
+                            # only a kept (checkpointed) candidate stream
+                            # is committed; resume reloads exactly that
+                            candidates=(
+                                cand_parts[-1]
+                                if cfg.store_inbound_links
+                                else None
                             ),
+                            counters={
+                                "n_fetched": n_fetched,
+                                "next_order": next_order,
+                                "pages_counted": pages_counted,
+                                "extra_internal": extra_internal,
+                                # resume may trust the saved bank only if
+                                # it covers EVERY part (amortized
+                                # maintenance can lag)
+                                "bank_synced": (not bank_lagging)
+                                and bank_synced_parts >= len(seen_parts),
+                            },
+                            metrics=metrics[-1],
                             filters_dir=filters_dir,
                         )
-                        last_snap = wave
-                    else:
-                        # between full snapshots, the per-wave output parts are
-                        # still persisted (cheap appends): on resume from the
-                        # last manifest, load_parts finds every wave ≤ latest —
-                        # no fetch_order holes with checkpoint_every > 1
-                        _commit(
-                            self.store.commit_parts,
-                            wave_id=wave,
-                            pages=cut,
-                            edges=edges_wave,
-                            candidates=cand_commit,
-                        )
+                    )
                 if limit_hit:
                     break
                 wave += 1
         finally:
             # a wave failure (Spark job failure, KeyboardInterrupt) must
-            # not leave queued async snapshot commits running while
-            # crawl() unwinds (round-6 advice): stop the pipeline at the
-            # boundary. A stored commit error is re-raised here on the
-            # straight-line path (exactly what the old post-loop close
-            # did); when a wave error is already propagating it keeps
-            # priority and the commit error is not allowed to mask it.
+            # not leave queued snapshot commits running while crawl()
+            # unwinds: stop the pipeline at the boundary. A stored commit
+            # error is re-raised here on the straight-line path; when a
+            # wave error is already propagating it keeps priority and the
+            # commit error is not allowed to mask it.
             if committer is not None:
                 import sys as _sys
 
@@ -1098,7 +1076,6 @@ class SparkCrawler:
         # post-loop drain/commit/result jobs get their own group so the
         # event log doesn't attribute them to the final wave
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", "drain")
-
 
         def _union(parts: list[DataFrame], proto: DataFrame) -> DataFrame:
             if not parts:
@@ -1185,25 +1162,11 @@ class SparkCrawler:
             if on_finished is not None:
                 on_finished(summary)
         elif cancelled and self.store is not None:
-            # cancellation drain (lib/cobweb_crawl_helper.rb:18-87): seal
-            # THIS crawl's remaining queue into a persisted remainder —
-            # if the cancel landed between sparse snapshots, commit the
-            # current state (all inputs are already checkpointed, nothing
-            # recomputes) so resume continues from the cancel point — and
-            # record a Cancelled run row (status transition analogue,
-            # lib/stats.rb end_crawl; NO finished enqueue happens).
-            if last_snap < wave - 1 and last_cut is not None:
-                self.store.commit_wave(
-                    wave_id=wave - 1,
-                    frontier=frontier,
-                    seen=seen,
-                    pages=last_cut,
-                    edges=last_edges,
-                    candidates=last_cands,
-                    counters=last_counters,
-                    metrics=metrics[-1] if metrics else None,
-                    filters_bank=self.prefilter,
-                )
+            # cancellation drain (lib/cobweb_crawl_helper.rb:18-87): every
+            # completed wave is already committed, so the last commit holds
+            # THIS crawl's remaining queue and resume continues from the
+            # cancel point. Record a Cancelled run row (status transition
+            # analogue, lib/stats.rb end_crawl; NO finished enqueue happens).
             cancelled_row = stats_ops.run_summary(
                 pages,
                 n_waves=result.n_waves,

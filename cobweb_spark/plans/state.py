@@ -2,13 +2,15 @@
 
 The reference approximates exactly-once semantics with Redis locks and a
 WATCH/MULTI first-to-finish guard (``lib/crawl.rb:241-291``); restartable
-crawls reuse a fixed crawl_id (changelog 0.0.40). Here every wave commits
-``(frontier, seen, pages, edges, candidates)`` as parquet plus a manifest
-JSON written via atomic rename — the parquet+manifest stand-in for an
-Iceberg snapshot (same semantics: readers only see manifests, a torn write
-is invisible). A killed crawl resumes from the latest manifest and
-reproduces the exact remaining waves (deterministic ordering makes the
-final state identical to an uninterrupted run).
+crawls reuse a fixed crawl_id (changelog 0.0.40). Here every completed
+wave commits ``(frontier, seen, pages, edges)`` — plus ``candidates`` when
+the crawl keeps inbound links — as parquet plus a manifest JSON written via
+atomic rename, through the single-worker ``CommitPipeline`` — the
+parquet+manifest stand-in for an Iceberg snapshot (same semantics: readers
+only see manifests, a torn write is invisible). A killed crawl resumes from
+the latest manifest and reproduces the exact remaining waves
+(deterministic ordering makes the final state identical to an
+uninterrupted run).
 
 Manifests carry the wave counters and per-partition lineage (row counts
 per shuffle partition) per the north rule.
@@ -23,9 +25,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = ("frontier", "seen", "pages", "edges", "candidates")
-
-
 class CommitPipeline:
     """Single-worker FIFO pipeline for snapshot commits.
 
@@ -33,11 +32,11 @@ class CommitPipeline:
     input is an immutable plan over checkpointed RDDs, so running the
     write on a second thread races nothing (Spark actions are
     thread-safe); ONE worker preserves commit order, which keeps the
-    ``_LATEST`` pointer monotonic exactly as in the synchronous path. A
-    failed commit is re-raised at the next ``submit``/``drain`` so the
-    crawl fails at a wave boundary instead of silently losing
-    durability. The same pipelining an Iceberg writer gets from
-    committing snapshot N while the next batch computes."""
+    ``_LATEST`` pointer monotonic. A failed commit is re-raised at the
+    next ``submit``/``drain`` so the crawl fails at a wave boundary
+    instead of silently losing durability. The same pipelining an
+    Iceberg writer gets from committing snapshot N while the next batch
+    computes."""
 
     def __init__(self) -> None:
         import queue
@@ -124,13 +123,10 @@ class SnapshotStore:
         metrics: dict | None = None,
         edges: DataFrame | None = None,
         candidates: DataFrame | None = None,
-        filters_bank=None,
         filters_dir: str | None = None,
     ) -> str:
-        """``filters_bank``: save the live bank into the snapshot (caller
-        guarantees no concurrent mutation). ``filters_dir``: adopt an
-        already-staged bank directory by rename — the async-commit path,
-        where the bank is staged synchronously at the wave boundary
+        """``filters_dir``: adopt an already-staged bank directory by
+        rename — the bank is staged synchronously at the wave boundary
         because the NEXT wave mutates it while this commit drains."""
         wdir = self._wave_dir(wave_id)
         tmp = wdir + ".tmp"
@@ -154,9 +150,7 @@ class SnapshotStore:
             lineage[name] = _partition_lineage(
                 self.spark.read.parquet(path)
             )
-        if filters_bank is not None:
-            filters_bank.save(os.path.join(tmp, "filters"))
-        elif filters_dir is not None:
+        if filters_dir is not None:
             os.rename(filters_dir, os.path.join(tmp, "filters"))
 
         manifest = {
@@ -167,8 +161,7 @@ class SnapshotStore:
                 n: os.path.join(wdir, n) for n, df in tables.items() if df is not None
             },
             "lineage": lineage,
-            "has_filters": filters_bank is not None
-            or filters_dir is not None,
+            "has_filters": filters_dir is not None,
         }
         with open(os.path.join(tmp, "manifest.json"), "w") as f:
             json.dump(manifest, f)
@@ -186,38 +179,6 @@ class SnapshotStore:
         with open(latest_tmp, "w") as f:
             f.write(str(wave_id))
         os.replace(latest_tmp, os.path.join(self.dir, "_LATEST"))
-        return wdir
-
-    def commit_parts(
-        self,
-        wave_id: int,
-        pages: DataFrame | None = None,
-        edges: DataFrame | None = None,
-        candidates: DataFrame | None = None,
-    ) -> str:
-        """Persist a wave's OUTPUT parts without a manifest / _LATEST bump.
-
-        Used between full snapshots when ``checkpoint_every > 1``: resume
-        replays from the last manifest wave, but the pages/edges/candidates
-        of every earlier wave must exist for ``load_parts`` — counters in
-        manifests are cumulative. Atomic via tmp-dir rename, same as
-        ``commit_wave``.
-        """
-        wdir = self._wave_dir(wave_id)
-        tmp = wdir + ".tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.makedirs(tmp)
-        for name, df in (
-            ("pages", pages),
-            ("edges", edges),
-            ("candidates", candidates),
-        ):
-            if df is not None:
-                df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-        if os.path.exists(wdir):
-            shutil.rmtree(wdir)
-        os.rename(tmp, wdir)
         return wdir
 
     def commit_finished(
@@ -333,15 +294,6 @@ class SnapshotStore:
         return self.spark.read.parquet(
             os.path.join(self._wave_dir(wave_id), name)
         )
-
-    def load_all_pages(self, upto_wave: int) -> list[DataFrame]:
-        """pages/edges/candidates of all committed waves ≤ upto_wave."""
-        out = []
-        for w in range(upto_wave + 1):
-            wdir = self._wave_dir(w)
-            if os.path.isdir(os.path.join(wdir, "pages")):
-                out.append((w, self.spark.read.parquet(os.path.join(wdir, "pages"))))
-        return out
 
     def load_parts(self, upto_wave: int, name: str) -> list[DataFrame]:
         out = []

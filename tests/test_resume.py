@@ -32,7 +32,7 @@ def test_kill_and_resume_identical(spark, sample_site_corpus, tmp_path):
 
     # killed after 2 waves
     store = SnapshotStore(spark, str(tmp_path / "state"))
-    killed_cfg = CrawlConfig(max_waves=2, checkpoint_every=1)
+    killed_cfg = CrawlConfig(max_waves=2)
     SparkCrawler(
         spark, docs, killed_cfg, snapshot_store=store
     ).crawl(fx.SAMPLE_SITE_BASE)
@@ -40,7 +40,7 @@ def test_kill_and_resume_identical(spark, sample_site_corpus, tmp_path):
 
     # resume to completion
     resumed = SparkCrawler(
-        spark, docs, CrawlConfig(checkpoint_every=1), snapshot_store=store
+        spark, docs, CrawlConfig(), snapshot_store=store
     ).crawl(fx.SAMPLE_SITE_BASE, resume=True)
 
     assert _pages_key(resumed) == full_pages
@@ -53,7 +53,7 @@ def test_manifest_lineage(spark, sample_site_corpus, tmp_path):
     SparkCrawler(
         spark,
         docs,
-        CrawlConfig(max_waves=1, checkpoint_every=1),
+        CrawlConfig(max_waves=1),
         snapshot_store=store,
     ).crawl(fx.SAMPLE_SITE_BASE)
     man = store.load_manifest(0)

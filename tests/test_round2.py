@@ -1,6 +1,6 @@
 """Round-2 feature tests: first_page_redirect_internal, additional_tags /
 ignore_default_tags, prefilter coverage of redirect finals, malformed-URL
-robustness, real PNG/WAV decode, checkpoint_every resume, finished sink,
+robustness, real PNG/WAV decode, finished sink,
 vectorized URL fast paths."""
 
 import os
@@ -289,47 +289,6 @@ class TestFinishedSink:
             spark, docs, CrawlConfig(), snapshot_store=store2
         ).crawl(fx.SEED_REDIRECT_BASE, resume=True)
         assert store2.load_crawl_runs().count() == 1
-
-
-class TestCheckpointEveryResume:
-    def test_sparse_checkpoints_no_page_holes(self, spark, tmp_path):
-        """ADVICE regression: with checkpoint_every=2, waves between
-        snapshots must still persist their pages — resume reproduces the
-        full dense fetch_order sequence."""
-        from cobweb_spark.plans.state import SnapshotStore
-
-        corpus = fx.build_seed_redirect_corpus()
-        docs = corpus_df(spark, corpus)
-        cfg = CrawlConfig(checkpoint_every=2)
-        full = SparkCrawler(spark, docs, cfg).crawl(fx.SEED_REDIRECT_BASE)
-        want = full.fetch_sequence()
-
-        sdir = str(tmp_path / "st")
-        store = SnapshotStore(spark, sdir)
-        waves = 0
-
-        def cancel():
-            return waves >= 3
-
-        def on_wave(_pages, _m):
-            nonlocal waves
-            waves += 1
-
-        SparkCrawler(
-            spark, docs, cfg, snapshot_store=store
-        ).crawl(fx.SEED_REDIRECT_BASE, on_wave=on_wave, cancel=cancel)
-
-        store2 = SnapshotStore(spark, sdir)
-        resumed = SparkCrawler(
-            spark, docs, cfg, snapshot_store=store2
-        ).crawl(fx.SEED_REDIRECT_BASE, resume=True)
-        got = resumed.fetch_sequence()
-        assert got == want
-        orders = [
-            r["fetch_order"]
-            for r in resumed.pages.orderBy("fetch_order").collect()
-        ]
-        assert orders == list(range(len(want)))
 
 
 class TestProbeTiers:

@@ -19,10 +19,10 @@ pytestmark = pytest.mark.spark
 
 
 class TestCancelDrain:
-    def _cancelled_run(self, spark, tmp_path, checkpoint_every=2):
+    def _cancelled_run(self, spark, tmp_path):
         corpus = fx.build_seed_redirect_corpus()
         docs = corpus_df(spark, corpus)
-        cfg = CrawlConfig(checkpoint_every=checkpoint_every)
+        cfg = CrawlConfig()
         sdir = str(tmp_path / "st")
         store = SnapshotStore(spark, sdir)
         waves = 0
@@ -47,13 +47,13 @@ class TestCancelDrain:
         assert statuses == ["Cancelled"]
 
     def test_remainder_persisted_at_cancel_point(self, spark, tmp_path):
-        # with checkpoint_every=2 the cancel lands between snapshots: the
-        # drain must seal the state so nothing is lost or replayed
+        # every completed wave is committed: the last commit before the
+        # cancel holds the remaining queue, so nothing is lost or replayed
         corpus, docs, cfg, sdir, store = self._cancelled_run(
             spark, tmp_path
         )
         latest = store.latest_wave()
-        assert latest == 1  # waves 0,1 ran; drain sealed wave 1
+        assert latest == 1  # waves 0,1 ran and committed
         frontier = store.load_table(latest, "frontier")
         assert frontier.count() > 0  # the undrained queue remainder
 
@@ -169,16 +169,18 @@ class TestStrayPercentParity:
 
 
 class TestPrecomputeEdgesParity:
-    """The precomputed edge table (keyed join + hoisted classification)
-    must reproduce the per-wave extraction path exactly."""
+    """The dictionary edge table (keyed join + hoisted classification)
+    must reproduce the per-wave extraction path exactly, and is built
+    only when the classifier is static and no inbound-link stream is
+    kept; every other precompute_edges=True config extracts per wave."""
 
     def test_static_hoisted_classification(self, spark, sample_site_corpus):
         # no redirects in the sample corpus → classification is hoisted
-        cfg = CrawlConfig(precompute_edges=True)
+        cfg = CrawlConfig(precompute_edges=True, store_inbound_links=False)
         docs = corpus_df(spark, sample_site_corpus)
         crawler = SparkCrawler(spark, docs, cfg)
         res = crawler.crawl(fx.SAMPLE_SITE_BASE)
-        assert crawler._edges_static is True
+        assert crawler._edge_dict is not None
         assert crawler._key_join is True
         oracle = CrawlOracle(sample_site_corpus, cfg).crawl(
             fx.SAMPLE_SITE_BASE
@@ -190,11 +192,11 @@ class TestPrecomputeEdgesParity:
         # redirects present + first_page_redirect_internal → classifier
         # can widen mid-crawl → classification must NOT be hoisted
         corpus = fx.build_seed_redirect_corpus()
-        cfg = CrawlConfig(precompute_edges=True)
+        cfg = CrawlConfig(precompute_edges=True, store_inbound_links=False)
         docs = corpus_df(spark, corpus)
         crawler = SparkCrawler(spark, docs, cfg)
         res = crawler.crawl(fx.SEED_REDIRECT_BASE)
-        assert crawler._edges_static is False
+        assert crawler._edge_dict is None
         oracle = CrawlOracle(corpus, cfg).crawl(fx.SEED_REDIRECT_BASE)
         assert res.fetch_sequence() == oracle.fetch_sequence
         assert {r["url"] for r in res.seen.collect()} == oracle.seen
@@ -203,12 +205,14 @@ class TestPrecomputeEdgesParity:
         self, spark, sample_site_corpus
     ):
         cfg = CrawlConfig(
-            precompute_edges=True, crawl_linked_external=True
+            precompute_edges=True,
+            crawl_linked_external=True,
+            store_inbound_links=False,
         )
         docs = corpus_df(spark, sample_site_corpus)
         crawler = SparkCrawler(spark, docs, cfg)
         res = crawler.crawl(fx.SAMPLE_SITE_BASE)
-        assert crawler._edges_static is False
+        assert crawler._edge_dict is None
         oracle = CrawlOracle(sample_site_corpus, cfg).crawl(
             fx.SAMPLE_SITE_BASE
         )

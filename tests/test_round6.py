@@ -242,55 +242,65 @@ class TestResizeRobustness:
 
 
 class TestAsyncCommits:
-    """cfg.async_commits pipelines snapshot writes on a background FIFO
-    worker; the store contents and resume behavior must be
-    byte-equivalent to the synchronous path."""
+    """Every completed wave commits on the background FIFO pipeline; the
+    store contents must equal the crawl's own result."""
 
-    def _crawl(self, spark, corpus, tmp_path, tag, **cfg_kw):
+    def _crawl(self, spark, corpus, base, tmp_path, tag, **cfg_kw):
         from cobweb_spark.config import CrawlConfig
         from cobweb_spark.plans.crawler import SparkCrawler
         from cobweb_spark.plans.state import SnapshotStore
         from cobweb_spark.sources.corpus import corpus_df
-        from cobweb_spark.testkit import fixtures as fx
 
         docs = corpus_df(spark, corpus)
         store = SnapshotStore(spark, str(tmp_path / tag))
         res = SparkCrawler(
             spark, docs, CrawlConfig(**cfg_kw), snapshot_store=store
-        ).crawl(fx.SAMPLE_SITE_BASE)
+        ).crawl(base)
         return res, store
 
-    def test_store_equivalent_to_sync(self, spark, sample_site_corpus, tmp_path):
-        import json
-        import os
+    def test_store_equivalent_to_result(self, spark, tmp_path):
+        from cobweb_spark.testkit import fixtures as fx
 
-        results = {}
-        for tag, async_on in (("sync", False), ("async", True)):
-            res, store = self._crawl(
-                spark,
-                sample_site_corpus,
-                tmp_path,
-                tag,
-                async_commits=async_on,
-            )
-            latest = store.latest_wave()
-            with open(
-                os.path.join(store._wave_dir(latest), "manifest.json")
-            ) as f:
-                man = json.load(f)
-            pages = sorted(
-                (r["fetch_order"], r["url"])
+        res, store = self._crawl(
+            spark,
+            fx.build_seed_redirect_corpus(),
+            fx.SEED_REDIRECT_BASE,
+            tmp_path,
+            "st",
+        )
+        latest = store.latest_wave()
+        assert latest == res.n_waves - 1
+
+        def rows(name, *cols):
+            return sorted(
+                tuple(r[c] for c in cols)
                 for w in range(latest + 1)
-                for r in store.load_table(w, "pages").collect()
+                for r in store.load_table(w, name).collect()
             )
-            results[tag] = (
-                latest,
-                man["counters"],
-                man["lineage"],
-                pages,
-                res.pages.count(),
+
+        want_pages = sorted(
+            (r["fetch_order"], r["url"]) for r in res.pages.collect()
+        )
+        assert rows("pages", "fetch_order", "url") == want_pages
+        assert rows("edges", "src", "dst") == sorted(
+            tuple(r) for r in res.edges.collect()
+        )
+        assert rows("candidates", "parent", "link", "position") == sorted(
+            (r["parent"], r["link"], r["position"])
+            for r in res.candidates.collect()
+        )
+        assert {
+            r["url"] for r in store.load_table(latest, "seen").collect()
+        } == {r["url"] for r in res.seen.collect()}
+        man = store.load_manifest(latest)
+        assert man["counters"]["n_fetched"] == len(want_pages)
+        for name in ("frontier", "seen", "pages", "edges", "candidates"):
+            assert (
+                sum(p["rows"] for p in man["lineage"][name])
+                == store.load_table(latest, name).count()
             )
-        assert results["sync"] == results["async"]
+        runs = store.load_crawl_runs().collect()
+        assert [r["current_status"] for r in runs] == ["Crawl Finished"]
 
     def test_resume_from_async_store(self, spark, sample_site_corpus, tmp_path):
         from cobweb_spark.config import CrawlConfig
@@ -310,13 +320,13 @@ class TestAsyncCommits:
         SparkCrawler(
             spark,
             docs,
-            CrawlConfig(max_waves=2, async_commits=True),
+            CrawlConfig(max_waves=2),
             snapshot_store=store,
         ).crawl(fx.SAMPLE_SITE_BASE)
         resumed = SparkCrawler(
             spark,
             docs,
-            CrawlConfig(async_commits=True),
+            CrawlConfig(),
             snapshot_store=store,
         ).crawl(fx.SAMPLE_SITE_BASE, resume=True)
         got = sorted(
