@@ -73,7 +73,6 @@ class CrawlConfig:
     # max URLs fetched per host per wave; None = unlimited (politeness
     # token budget; the deterministic analogue of a per-host delay)
     host_budget: int | None = None
-    shuffle_partitions: int = 32
     # seen-membership prefilter tier
     bloom_shards: int = 32
     bloom_capacity_per_shard: int = 1 << 17
@@ -92,9 +91,6 @@ class CrawlConfig:
     # anti-joins against the (small, co-partitioned) un-synced parts —
     # zero bank jobs on most waves, exactness preserved
     bank_sync_every: int = 4
-    # persist narrow (meta, spans) projections of the corpus for the
-    # per-wave joins; disable when the corpus doesn't fit executor storage
-    cache_corpus: bool = True
     # precompute the whole corpus' link extraction and classification
     # ONCE (one mapInPandas pass) into the dictionary edge table — 8-byte
     # (src_key, dst_key, position) rows plus one (link, host) entry per
@@ -117,10 +113,6 @@ class CrawlConfig:
     # sandbox scale — the same keying the north rule specifies for the
     # bloom/cuckoo membership tier. Set False for string-exact mode.
     slim_expand: bool = True
-    # snapshot/resume: the crawler takes a SnapshotStore
-    # (SparkCrawler(snapshot_store=...)), which commits every completed
-    # wave on a background FIFO worker while the next wave computes
-    state_dir: str | None = None
     max_waves: int = 10_000
 
     def resolved_internal_urls(self, base_url: str | None) -> list[str]:

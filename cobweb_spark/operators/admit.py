@@ -40,8 +40,7 @@ def admit_wave(
     sort twice more inside itself (overflow branch + survivors branch).
     Measured on a 2M-row frontier, budget 5000 (one 60% mega-host):
     unpinned rank-filter 19.8–33.8s, the old anti-join 3.4–3.7s, pinned
-    rank-filter 1.8–4.3s per admit+consume cycle — BENCH/scratch/r5/
-    admit_ab.py.
+    rank-filter 1.8–4.3s per admit+consume cycle.
 
     Re-ranking note (round-4 verdict "What's wrong" #3): with
     budget ≪ mega-host size the deferred set is re-ranked (two window

@@ -66,6 +66,18 @@ def _load_bank_path(token, path: str, cap: int, fpp: float) -> dict:
     return filters
 
 
+def bank_scratch_base() -> str:
+    """Directory under which a bank without a ``scratch_dir`` makes its
+    ``seenbank-*`` scratch."""
+    import os
+    import tempfile
+
+    return os.environ.get(
+        "SPARK_GRAFT_LOCAL_DIR",
+        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir(),
+    )
+
+
 class SeenFilterBank:
     """Filter state lives in a real (scratch parquet) table, re-written
     per merge — NEVER as a chained in-session lineage. A chained plan
@@ -85,7 +97,6 @@ class SeenFilterBank:
         fpp: float = 0.01,
         scratch_dir: str | None = None,
     ):
-        import os
         import shutil
         import tempfile
         import weakref
@@ -95,11 +106,9 @@ class SeenFilterBank:
         self.capacity = capacity_per_shard
         self.fpp = fpp
         if scratch_dir is None:
-            base = os.environ.get(
-                "SPARK_GRAFT_LOCAL_DIR",
-                "/dev/shm" if os.path.isdir("/dev/shm") else None,
+            scratch_dir = tempfile.mkdtemp(
+                prefix="seenbank-", dir=bank_scratch_base()
             )
-            scratch_dir = tempfile.mkdtemp(prefix="seenbank-", dir=base)
             # a bank nobody close()s must not leak its scratch: remove the
             # directory when the bank is collected or the interpreter
             # exits (a caller's scratch_dir stays the caller's)

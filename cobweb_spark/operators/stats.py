@@ -189,45 +189,3 @@ def collect_stats(pages: DataFrame) -> dict:
     }
     return row
 
-
-def sessionize(
-    events: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
-    """Sessionize an event stream: split each user's timeline wherever
-    the gap to the previous event exceeds ``gap_minutes``, and emit one
-    row per session with its event count, bounds, and duration — the
-    standard clickstream/engagement rollup.
-
-    Scale shape: ONE shuffle on user_id; the lag window, the running
-    session counter, and the final per-session aggregation all run
-    inside that partitioning (Catalyst reuses the exchange — the
-    groupBy keys are a superset of the window partition key). Per-user
-    timelines are small by nature, so the window never sees a mega
-    partition; ordering ties break on event_id for determinism.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_s = int(gap_minutes) * 60
-    prev = F.lag("ts").over(w)
-    is_new = (
-        prev.isNull()
-        | (
-            F.unix_timestamp("ts") - F.unix_timestamp(prev)
-            > F.lit(gap_s)
-        )
-    ).cast("int")
-    numbered = events.select("user_id", "ts", "event_id").withColumn(
-        "session_seq",
-        F.sum(is_new).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return numbered.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.min("ts").alias("t_start"),
-        F.max("ts").alias("t_end"),
-        (
-            F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
-        ).alias("duration_s"),
-    )

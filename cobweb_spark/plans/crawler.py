@@ -173,8 +173,7 @@ class SparkCrawler:
         ).collect()[0]
         self._key_join = chk["n"] == chk["nk"]
         self._meta = keyed_meta(documents, self._key_join)
-        if self.cfg.cache_corpus:
-            self._meta = self._meta.repartition(n_part, "doc_key").persist()
+        self._meta = self._meta.repartition(n_part, "doc_key").persist()
         # spans stay UNCACHED: Spark's in-memory cache is row-serialized
         # for nested types, so scanning cached span arrays per wave is far
         # slower than a pruned vectorized parquet read

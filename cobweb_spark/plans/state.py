@@ -13,7 +13,7 @@ the latest manifest and reproduces the exact remaining waves
 uninterrupted run).
 
 Manifests carry the wave counters and per-partition lineage (row counts
-per shuffle partition) per the north rule.
+per written partition, read from the parquet footers) per the north rule.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
 
 class CommitPipeline:
     """Single-worker FIFO pipeline for snapshot commits.
@@ -84,14 +84,19 @@ class CommitPipeline:
             raise RuntimeError("async snapshot commit failed") from err
 
 
-def _partition_lineage(df: DataFrame) -> list[dict]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .orderBy("pid")
-        .collect()
-    )
-    return [{"partition": r["pid"], "rows": r["count"]} for r in rows]
+def _file_lineage(path: str) -> list[dict]:
+    """Row counts per written partition of a parquet table, from its part
+    files: ``part-NNNNN-…`` names the writing task's partition id and the
+    footer holds the row count, so no Spark job re-reads the table."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for name in os.listdir(path):
+        if name.startswith("part-"):
+            pid = int(name.split("-", 2)[1])
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return [{"partition": p, "rows": n} for p, n in sorted(rows.items())]
 
 
 class SnapshotStore:
@@ -147,9 +152,7 @@ class SnapshotStore:
                 continue
             path = os.path.join(tmp, name)
             df.write.mode("overwrite").parquet(path)
-            lineage[name] = _partition_lineage(
-                self.spark.read.parquet(path)
-            )
+            lineage[name] = _file_lineage(path)
         if filters_dir is not None:
             os.rename(filters_dir, os.path.join(tmp, "filters"))
 

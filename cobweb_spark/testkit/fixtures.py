@@ -217,14 +217,6 @@ def sample_site_robots_rules(
         return parse_robots_txt(host, f.read())
 
 
-def google_robots_rules(
-    samples_dir: str = REFERENCE_SAMPLES, host: str = "localhost"
-) -> list[tuple]:
-    path = os.path.join(samples_dir, "robots.txt")
-    with open(path) as f:
-        return parse_robots_txt(host, f.read())
-
-
 def parse_robots_txt(host: str, data: str) -> list[tuple]:
     """robots.txt → (host, user_agent, rule, pattern, rank) rows.
 

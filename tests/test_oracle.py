@@ -227,25 +227,50 @@ class TestRedirects:
         assert p.error == "Redirect Limit reached"
 
 
+# Inline stand-in for the reference's spec/samples/robots.txt, reduced to
+# the groups its precedence specs exercise (spec/cobweb/robots_spec.rb).
+GOOGLE_STYLE_ROBOTS_TXT = """\
+# comment lines and blank lines are skipped
+User-agent: google
+Disallow: /
+
+User-agent: cybermapper
+Allow: /
+
+User-agent: *
+Allow: /catalogs/about
+Disallow: /search
+Disallow: /catalogs
+"""
+
+
+def _google_style_rules():
+    return RobotsRules(
+        fx.parse_robots_txt("localhost", GOOGLE_STYLE_ROBOTS_TXT)
+    )
+
+
 class TestRobots:
     def test_google_disallow_all(self):
-        rules = RobotsRules(fx.google_robots_rules(host="localhost"))
+        rules = _google_style_rules()
         assert not rules.allowed("http://localhost/anything", "google")
         assert not rules.allowed("http://localhost/", "google")
 
     def test_cybermapper_allow_all(self):
-        rules = RobotsRules(fx.google_robots_rules(host="localhost"))
+        rules = _google_style_rules()
         assert rules.allowed("http://localhost/anything", "cybermapper")
+        # its own group wins over the '*' group's /search disallow
+        assert rules.allowed("http://localhost/search?q=x", "cybermapper")
 
     def test_wildcard_fallback(self):
-        rules = RobotsRules(fx.google_robots_rules(host="localhost"))
+        rules = _google_style_rules()
         # unknown UA falls back to '*' — /search disallowed for *
         assert not rules.allowed("http://localhost/search?q=x", "cobweb")
         assert rules.allowed("http://localhost/notlisted", "cobweb")
 
     def test_allow_before_disallow(self):
         # /catalogs disallowed but /catalogs/about allowed first
-        rules = RobotsRules(fx.google_robots_rules(host="localhost"))
+        rules = _google_style_rules()
         assert rules.allowed("http://localhost/catalogs/about", "cobweb")
         assert not rules.allowed("http://localhost/catalogs/other", "cobweb")
 

@@ -1,17 +1,16 @@
 """Round-4 feature tests: near-dup cluster resolution (connected
-components over the LSH pair graph), ANN recall floor, within-wave
-cancellation, wave_partition_lineage table, politeness-budget parity at
-a mid-size corpus."""
+components over the LSH pair graph), within-wave cancellation,
+wave_partition_lineage table, politeness-budget parity at a mid-size
+corpus."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from cobweb_spark.operators import similarity, textops
+from cobweb_spark.operators import textops
 
 pytestmark = pytest.mark.spark
 
 SF = "/root/testdata/sf0.001"
-SF_01 = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="module")
@@ -220,50 +219,3 @@ class TestPolitenessMidSize:
             .count()
         )
         assert mega_waves >= 3
-
-
-class TestAnnRecall:
-    """ANN quality, measured instead of assumed (round-4 brief item 6).
-
-    On the sandbox's near-isotropic synthetic embeddings a SINGLE
-    sign-LSH table (8 planes + Hamming-1 multiprobe) measures recall@5
-    ≈ 0.11 — per-bit collision probability p = 1 − θ/π is ≈0.55 when
-    true neighbors sit near 80°, so one table's hit rate is ~p^8. That
-    is the honest single-table number and `ann_lsh_topk` remains the
-    bit-identical-oracle CORRECTNESS tier. The production-recall tier is
-    `lsh_ann_topk_multitable` (L independent tables, standard LSH
-    amplification: miss = (1 − p_hit)^L), pinned here at ≥0.8.
-    """
-
-    def _recall(self, exact, approx):
-        truth = {
-            (r["query_id"], r["neighbor_id"]) for r in exact.collect()
-        }
-        got = {
-            (r["query_id"], r["neighbor_id"]) for r in approx.collect()
-        }
-        return len(truth & got) / len(truth)
-
-    def test_multitable_recall_at_5(self, spark):
-        emb = spark.read.parquet(f"{SF_01}/embeddings.parquet").cache()
-        qids = list(range(20))
-        exact = similarity.cosine_topk(emb, query_ids=qids, k=5)
-        approx = similarity.lsh_ann_topk_multitable(
-            emb, query_ids=qids, k=5, dim=64, n_tables=16
-        )
-        recall = self._recall(exact, approx)
-        # floor = regression alarm, not the measured value
-        assert recall >= 0.8, f"multitable recall@5 = {recall:.3f}"
-        emb.unpersist()
-
-    def test_single_table_recall_documented(self, spark):
-        # pin the single-table tier's measured band so a silent change in
-        # bucketing shows up; this tier exists for oracle parity, not
-        # recall (see class docstring)
-        emb = spark.read.parquet(f"{SF_01}/embeddings.parquet").cache()
-        qids = list(range(20))
-        exact = similarity.cosine_topk(emb, query_ids=qids, k=5)
-        approx = similarity.lsh_ann_topk(emb, query_ids=qids, k=5, dim=64)
-        recall = self._recall(exact, approx)
-        assert 0.0 < recall < 0.5, f"single-table recall@5 = {recall:.3f}"
-        emb.unpersist()

@@ -1,5 +1,5 @@
-"""Round-5 operators: contamination, repetition, segment dedup,
-semantic (embedding) dedup, JPEG header decode.
+"""Round-5 operators: contamination, repetition, segment dedup, JPEG
+header decode.
 
 Crafted-input goldens computed by hand — independent of the DuckDB
 oracle that the driver's CORRECTNESS gate runs over the sf tables.
@@ -10,7 +10,7 @@ import math
 
 import pytest
 
-from cobweb_spark.operators import similarity, textops
+from cobweb_spark.operators import textops
 
 
 def _docs_df(spark, texts: dict[int, str]):
@@ -128,70 +128,6 @@ class TestSegmentDedup:
         assert out[0]["n_segments"] == 2 and out[0]["n_dup_segments"] == 0
         assert out[1]["n_segments"] == 2 and out[1]["n_dup_segments"] == 1
         assert out[2]["n_segments"] == 1
-
-
-class TestSemanticDedup:
-    def _emb_df(self, spark, dim=8):
-        # planted cluster: vectors 0,1,2 near-identical; 3,4 a second
-        # cluster; 5..14 spread out (deterministic, no RNG)
-        def unit(seed):
-            v = [
-                math.sin(0.7 * seed + 1.3 * d + 0.1) for d in range(dim)
-            ]
-            n = math.sqrt(sum(x * x for x in v))
-            return [x / n for x in v]
-
-        base_a, base_b = unit(1), unit(40)
-        rows = []
-        for i in range(3):
-            rows.append((i, [x + 0.01 * i for x in base_a]))
-        for i in range(3, 5):
-            rows.append((i, [x + 0.01 * i for x in base_b]))
-        for i in range(5, 15):
-            rows.append((i, unit(100 + 7 * i)))
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-
-    def test_planted_clusters_merge(self, spark):
-        emb = self._emb_df(spark)
-        keepers = {
-            r["vec_id"]: r["keeper"]
-            for r in similarity.semantic_dedup_keepers(
-                emb, threshold=0.95, n_planes=4, n_tables=8, dim=8
-            ).collect()
-        }
-        assert len(keepers) == 15
-        # near-identical vectors share every LSH bucket -> must merge
-        assert keepers[0] == keepers[1] == keepers[2] == 0
-        assert keepers[3] == keepers[4] == 3
-
-    def test_keepers_match_unionfind_over_pairs(self, spark):
-        emb = self._emb_df(spark)
-        pairs = similarity.semantic_dedup_pairs(
-            emb, threshold=0.9, n_planes=4, n_tables=8, dim=8
-        ).collect()
-        # independent union-find over the same pair set
-        parent = {i: i for i in range(15)}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in pairs:
-            a, b = find(r["vec_a"]), find(r["vec_b"])
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        expect = {i: find(i) for i in range(15)}
-        got = {
-            r["vec_id"]: r["keeper"]
-            for r in similarity.semantic_dedup_keepers(
-                emb, threshold=0.9, n_planes=4, n_tables=8, dim=8
-            ).collect()
-        }
-        assert got == expect
 
 
 class TestJpegCodec:
@@ -483,56 +419,6 @@ class TestUnigramLogprob:
         assert out[0] < out[9]
 
 
-class TestIvfAnn:
-    def test_centroids_deterministic_min_md5(self, spark):
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.01/embeddings.parquet"
-        )
-        cents = similarity.ivf_centroids(emb, n_centroids=8)
-        ids = [c for c, _ in cents]
-        all_ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
-        expect = sorted(
-            all_ids,
-            key=lambda v: (hashlib.md5(str(v).encode()).hexdigest(), v),
-        )[:8]
-        assert ids == expect
-
-    def test_assignment_partitions_corpus(self, spark):
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.01/embeddings.parquet"
-        )
-        cents = similarity.ivf_centroids(emb, n_centroids=8)
-        assigned = similarity.ivf_assign(emb, cents)
-        assert assigned.count() == emb.count()  # map-only, no row loss
-        cids = {r["cid"] for r in assigned.select("cid").distinct().collect()}
-        assert cids <= {c for c, _ in cents}
-        # a centroid vector's best match is itself (cosine 1.0)
-        own = {
-            r["vec_id"]: r["cid"]
-            for r in assigned.filter(
-                assigned.vec_id.isin([c for c, _ in cents])
-            ).collect()
-        }
-        assert own == {c: c for c, _ in cents}
-
-    def test_recall_band_vs_exact(self, spark):
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.1/embeddings.parquet"
-        ).cache()
-        qids = list(range(20))
-        exact = similarity.cosine_topk(emb, query_ids=qids, k=5)
-        approx = similarity.ivf_ann_topk(
-            emb, query_ids=qids, k=5, n_centroids=8, nprobe=2
-        )
-        truth = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-        got = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-        recall = len(truth & got) / len(truth)
-        # nprobe/K = 2/8 of a near-isotropic corpus: recall tracks the
-        # probed mass; floor = regression alarm (measured band in
-        # BENCH/BASELINE.md), raise nprobe for production recall
-        assert recall >= 0.2, f"ivf recall@5 = {recall:.3f}"
-
-
 class TestMediaResize:
     def test_png_roundtrip_pixels(self):
         """Resized payload decodes to exactly the nearest-neighbor
@@ -736,46 +622,3 @@ class TestLengthStats:
         assert en["p90"] == pytest.approx(3 + 0.7 * 7)  # idx 0.9*3=2.7
         assert en["p99"] == pytest.approx(3 + 0.97 * 7)
         assert out["de"]["p50"] == 7.0
-
-
-class TestSessionize:
-    def test_gap_splits_sessions(self, spark):
-        from datetime import datetime, timedelta
-
-        from cobweb_spark.operators.stats import sessionize
-
-        t0 = datetime(2024, 1, 1)
-        rows = [
-            (1, 1, t0),
-            (2, 1, t0 + timedelta(seconds=100)),
-            (3, 1, t0 + timedelta(seconds=2000)),  # 1900s gap > 1800
-            (4, 1, t0 + timedelta(seconds=2100)),
-            (5, 2, t0),
-        ]
-        df = spark.createDataFrame(
-            rows, "event_id long, user_id long, ts timestamp"
-        )
-        out = {
-            (r["user_id"], r["session_seq"]): r
-            for r in sessionize(df, gap_minutes=30).collect()
-        }
-        assert set(out) == {(1, 1), (1, 2), (2, 1)}
-        assert out[(1, 1)]["n_events"] == 2
-        assert out[(1, 1)]["duration_s"] == 100
-        assert out[(1, 2)]["n_events"] == 2
-        assert out[(1, 2)]["duration_s"] == 100
-        assert out[(2, 1)]["n_events"] == 1
-        assert out[(2, 1)]["duration_s"] == 0
-
-    def test_exact_gap_does_not_split(self, spark):
-        from datetime import datetime, timedelta
-
-        from cobweb_spark.operators.stats import sessionize
-
-        t0 = datetime(2024, 1, 1)
-        df = spark.createDataFrame(
-            [(1, 1, t0), (2, 1, t0 + timedelta(seconds=1800))],
-            "event_id long, user_id long, ts timestamp",
-        )
-        rows = sessionize(df, gap_minutes=30).collect()
-        assert len(rows) == 1 and rows[0]["n_events"] == 2  # strict >

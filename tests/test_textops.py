@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from cobweb_spark.operators import similarity, textops
+from cobweb_spark.operators import textops
 
 pytestmark = pytest.mark.spark
 
@@ -13,11 +13,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
 
 
 class TestTokenAndQuality:
@@ -119,34 +114,6 @@ class TestDedup:
         assert (1, 3) not in pairs
 
 
-class TestSimilarity:
-    def test_topk_shape_and_order(self, emb):
-        res = similarity.cosine_topk(emb, query_ids=[0, 1], k=3)
-        rows = res.collect()
-        assert len(rows) == 6
-        by_q = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(
-                (r["rank"], r["cosine"])
-            )
-        for q, rs in by_q.items():
-            rs.sort()
-            cosines = [c for _rk, c in rs]
-            assert cosines == sorted(cosines, reverse=True)
-
-    def test_lsh_recall_vs_exact(self, emb):
-        exact = similarity.cosine_topk(emb, query_ids=[0, 1, 2], k=5)
-        approx = similarity.lsh_ann_topk(
-            emb, query_ids=[0, 1, 2], k=5, n_planes=4, multiprobe=True
-        )
-        e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-        a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-        recall = len(e & a) / len(e)
-        # 4-plane sign-LSH + Hamming-1 multiprobe covers 5/16 of the
-        # space; near neighbors concentrate in probed buckets
-        assert recall >= 0.3
-
-
 class TestMultimodal:
     def test_decode_plumbing(self, spark):
         from cobweb_spark.operators.multimodal import (
@@ -185,34 +152,3 @@ class TestMultimodal:
         docs = corpus_df(spark, corpus)
         with pytest.raises(Exception, match="NotImplementedError|no codec"):
             decode_media(media_payloads(docs), strict=True).collect()
-
-
-class TestStreaming:
-    def test_minute_counts_stream(self, spark, tmp_path):
-        from cobweb_spark.streaming.metrics import (
-            minute_counts_stream,
-            run_available_now,
-        )
-
-        events = spark.read.parquet(f"{SF}/events.parquet")
-        path = str(tmp_path / "events_stream")
-        events.write.parquet(path)
-        agg = minute_counts_stream(
-            spark, path, events.schema, ts_col="ts", group_col="event_type"
-        )
-        result = run_available_now(agg, "t_minute_counts")
-        batch = (
-            events.groupBy(
-                F.date_trunc("minute", "ts").alias("minute"), "event_type"
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        got = {
-            (str(r["minute"]), r["event_type"]): r["n"]
-            for r in result.collect()
-        }
-        want = {
-            (str(r["minute"]), r["event_type"]): r["n"]
-            for r in batch.collect()
-        }
-        assert got == want

@@ -5,6 +5,7 @@ filter bank's scratch is reclaimed without an explicit close()."""
 
 import gc
 import os
+import re
 
 import pytest
 
@@ -49,6 +50,49 @@ class TestCandidatesResume:
         assert resumed.fetch_sequence() == want.fetch_sequence()
         assert _candidate_rows(resumed) == _candidate_rows(want)
         assert bool(_candidate_rows(want)) == inbound
+
+
+def _footer_lineage(path):
+    """(partition, rows) per partition id of a parquet table's part files,
+    read from the files themselves."""
+    import pyarrow.parquet as pq
+
+    rows = {}
+    for name in os.listdir(path):
+        m = re.match(r"part-(\d+)-", name)
+        if m:
+            pid = int(m.group(1))
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return sorted(rows.items())
+
+
+class TestManifestLineage:
+    def test_lineage_is_the_written_partitions(self, spark, tmp_path):
+        docs = corpus_df(spark, fx.build_seed_redirect_corpus())
+        store = SnapshotStore(spark, str(tmp_path / "st"))
+        SparkCrawler(
+            spark,
+            docs,
+            CrawlConfig(store_inbound_links=True),
+            snapshot_store=store,
+        ).crawl(fx.SEED_REDIRECT_BASE)
+        lin = {
+            (r["wave_id"], r["table"], r["partition"]): r["rows"]
+            for r in store.load_wave_partition_lineage().collect()
+        }
+        for w in range(store.latest_wave() + 1):
+            man = store.load_manifest(w)
+            assert set(man["lineage"]) == set(man["tables"])
+            for name, path in man["tables"].items():
+                got = [
+                    (e["partition"], e["rows"]) for e in man["lineage"][name]
+                ]
+                assert got == _footer_lineage(path), (w, name)
+                assert got == sorted(
+                    (p, n) for (wv, t, p), n in lin.items()
+                    if wv == w and t == name
+                )
 
 
 class TestLinkDictionaryClash:

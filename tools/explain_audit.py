@@ -80,12 +80,6 @@ def main(out_path: str = "BENCH/PLANS.md"):
         )
     )
 
-    from cobweb_spark.operators.stats import sessionize
-
-    sf_events = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-    sections["sessionize (window + session agg)"] = plan_of(
-        sessionize(sf_events)
-    )
     sections["temperature mixing (broadcast rates)"] = plan_of(
         textops.temperature_sample(sf_docs)
     )
@@ -116,20 +110,12 @@ def main(out_path: str = "BENCH/PLANS.md"):
             == sections["link extraction (mapInPandas)"].count("Exchange"),
         )
     )
-    checks.append(
-        (
-            "minhash one shuffle (partial agg)",
-            sections["minhash signatures"].count("Exchange") <= 2,
-        )
-    )
     # formatted plans print each node in the tree AND the details block,
     # so N real exchanges count as 2N occurrences
     checks.append(
         (
-            "sessionize: lag window, session window and final agg share "
-            "ONE user_id shuffle",
-            sections["sessionize (window + session agg)"].count("Exchange")
-            <= 2,
+            "minhash one shuffle (partial agg)",
+            sections["minhash signatures"].count("Exchange") <= 2,
         )
     )
     checks.append(
