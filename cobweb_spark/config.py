@@ -77,20 +77,13 @@ class CrawlConfig:
     bloom_shards: int = 32
     bloom_capacity_per_shard: int = 1 << 17
     bloom_fpp: float = 0.01
-    use_seen_prefilter: bool = True
     # the bloom probe tier engages once the seen set reaches this size;
     # below it the exact anti-join's build side is small enough that the
     # probe's extra pass costs more than the join it bypasses (measured:
     # at |seen| ≈ |wave| ≈ 1M the probe+split roughly doubles expand
     # time; the tier's win is the |seen| ≫ |wave| regime). The bank is
-    # MAINTAINED from wave 0 regardless, so engagement is seamless.
+    # built from the seen parts when it first engages (operators/dedup.py).
     prefilter_min_seen: int = 1_000_000
-    # bounded-staleness bank maintenance: once engaged, the bank is
-    # re-synced only after this many un-synced seen parts accumulate;
-    # in between, "definite miss" candidates are backstopped by exact
-    # anti-joins against the (small, co-partitioned) un-synced parts —
-    # zero bank jobs on most waves, exactness preserved
-    bank_sync_every: int = 4
     # precompute the whole corpus' link extraction and classification
     # ONCE (one mapInPandas pass) into the dictionary edge table — 8-byte
     # (src_key, dst_key, position) rows plus one (link, host) entry per

@@ -152,18 +152,6 @@ class SeenFilterBank:
             F.pmod(key, F.lit(self.n_shards)).cast("int"),
         )
 
-    def _load_shard(self, fpdf: pd.DataFrame) -> ShardFilter:
-        if len(fpdf) == 0:
-            return ShardFilter(self.capacity, self.fpp)
-        row = fpdf.iloc[0]
-        return ShardFilter.from_state(
-            bytes(row["bloom"]),
-            int(row["n_keys"]),
-            bytes(row["cuckoo"]),
-            self.capacity,
-            self.fpp,
-        )
-
     def close(self) -> None:
         """Delete the scratch generations (driver-side cleanup)."""
         import shutil
@@ -297,10 +285,3 @@ class SeenFilterBank:
             .applyInPandas(probe, out_schema)
         )
         return probed.drop("__key", "__shard")
-
-    # -- persistence (snapshot integration) --------------------------------
-    def save(self, path: str) -> None:
-        self.filters.write.mode("overwrite").parquet(path)
-
-    def load(self, path: str) -> None:
-        self._publish(self.spark.read.schema(FILTERS_SCHEMA).parquet(path))

@@ -25,7 +25,6 @@ locks (``lib/crawl.rb:241-291``).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +39,7 @@ from ..operators.classify import (
     robots_gate,
     select_internal,
 )
-from ..operators.dedup import reject_seen
+from ..operators.dedup import SeenParts
 from ..operators.extract import extract_links
 from ..operators.fetch import apply_crawl_limit_cut, fetch_meta
 from ..operators.order import zip_with_order
@@ -140,18 +139,15 @@ class SparkCrawler:
         self.cfg = config or CrawlConfig()
         if seen_prefilter is _AUTO:
             # the north rule's seen tier: bloom+cuckoo bank constructed
-            # from config unless the caller supplies (or disables) one
-            if self.cfg.use_seen_prefilter:
-                from ..operators.filters import SeenFilterBank
+            # from config unless the caller supplies one (or None)
+            from ..operators.filters import SeenFilterBank
 
-                seen_prefilter = SeenFilterBank(
-                    spark,
-                    n_shards=self.cfg.bloom_shards,
-                    capacity_per_shard=self.cfg.bloom_capacity_per_shard,
-                    fpp=self.cfg.bloom_fpp,
-                )
-            else:
-                seen_prefilter = None
+            seen_prefilter = SeenFilterBank(
+                spark,
+                n_shards=self.cfg.bloom_shards,
+                capacity_per_shard=self.cfg.bloom_capacity_per_shard,
+                fpp=self.cfg.bloom_fpp,
+            )
         # narrow cached projections: every wave joins against the corpus,
         # so the metadata columns and the (heavy) spans column are cached
         # separately — fetch/redirect joins scan only the small frame.
@@ -424,21 +420,6 @@ class SparkCrawler:
             if extra_internal:
                 classifier = cfg.classifier(base_url, extra_internal)
             wave = latest + 1
-            # bank_lagging: filter maintenance is LAZY — skipped entirely
-            # until the probe tier first engages, then bulk-synced from
-            # `seen` (bloom re-adds are idempotent). Costs nothing on
-            # crawls that never reach prefilter_min_seen.
-            bank_lagging = True
-            if self.prefilter is not None and man.get("has_filters") and (
-                man["counters"].get("bank_synced", True)
-            ):
-                self.prefilter.load(
-                    os.path.join(self.store._wave_dir(latest), "filters")
-                )
-                bank_lagging = False
-            # the single resume part mirrors the loaded seen exactly; the
-            # loaded bank (if any) covered it at commit time
-            bank_synced_parts = 1 if not bank_lagging else 0
         else:
             frontier = self._seed_frontier(base_url).localCheckpoint()
             seen = frontier.select("url").localCheckpoint()
@@ -448,8 +429,6 @@ class SparkCrawler:
             pages_counted = 0
             wave = 0
             waves_done = 0
-            bank_lagging = True
-            bank_synced_parts = 0
         if cfg.precompute_edges:
             # one extraction pass over the corpus, with every
             # wave-independent stage hoisted into it (when the classifier
@@ -463,20 +442,16 @@ class SparkCrawler:
         # from the wave's pages by fetch_order at frontier emission).
         # A link-key collision found by the edge build forces strings.
         slim = bool(cfg.slim_expand) and self._link_keys_exact
-        part_col = "link_key" if slim else "link"
-        # the seen-part LSM: reject_seen chains left_anti joins over these
-        # hash-partitioned checkpointed parts, shuffling the candidate side
-        # once and the parts never (their partitioning survives the
-        # checkpoint)
-        seen_parts = [
-            seen.select(
-                F.xxhash64("url").alias("link_key")
-                if slim
-                else F.col("url").alias("link")
-            )
-            .repartition(self._n_part, part_col)
-            .localCheckpoint(eager=False)
-        ]
+        # the seen tier: key frames per wave plus the bloom bank, which
+        # is built from them when it first engages (a resumed crawl's
+        # bank is rebuilt from the loaded seen part)
+        seen_tier = SeenParts(
+            seen,
+            self._n_part,
+            slim,
+            bank=self.prefilter,
+            min_seen=cfg.prefilter_min_seen,
+        )
         empty_frontier = frontier.limit(0)
         # n_frontier tracks |frontier| so the loop head needs no isEmpty job
         n_frontier = frontier.count() if latest is not None else next_order
@@ -690,11 +665,7 @@ class SparkCrawler:
                     # (broadcast anti, no shuffle) — no per-wave bank add; the
                     # finals enter the bank at the next amortized sync via
                     # their seen part.
-                    wave_finals = finals.select(
-                        F.xxhash64("url").alias("link_key")
-                        if slim
-                        else F.col("url").alias("link")
-                    )
+                    wave_finals = seen_tier.keys(finals)
 
                 # extraction input: permitted pages that matched a corpus
                 # document (only those can yield links; the corpus_hit guard
@@ -775,69 +746,13 @@ class SparkCrawler:
                 # SLOWER: the resolution join adds a full exchange of the
                 # new-link stream, which outweighs the ~30-byte strings it
                 # removes — see BENCH/BASELINE.md round-5.)
-                fresh = first_discovery_wins(selected, key_col=part_col)
-                # bloom tier engages once seen is big enough to out-cost the
-                # probe (config.prefilter_min_seen); the bank itself is kept
-                # current every wave either way, so engagement is seamless.
+                fresh = first_discovery_wins(
+                    selected, key_col=seen_tier.key_col
+                )
                 # next_order counts every URL ever enqueued == |seen| modulo
-                # redirect finals.
-                engaged = (
-                    self.prefilter is not None
-                    and next_order >= cfg.prefilter_min_seen
-                )
-                if engaged:
-                    if bank_lagging:
-                        # first engagement: bulk-sync the bank from the
-                        # accumulated seen PARTS (one cogroup pass ≈ one
-                        # anti-join's worth of work, paid once) — cheaper
-                        # than per-wave maintenance on every crawl that
-                        # never engages. Round 7: sync from the part
-                        # frames, not the string union — in slim mode they
-                        # already hold the 8-byte keys, so the cogroup
-                        # skips re-hashing |seen| URL strings. This wave's
-                        # redirect finals are not in any part yet; they
-                        # ride the miss-backstop chain below exactly as on
-                        # the amortized-maintenance path.
-                        bulk = seen_parts[0]
-                        for p in seen_parts[1:]:
-                            bulk = bulk.unionByName(p)
-                        self.prefilter.add(
-                            bulk, key_col=part_col, key_is_hash=slim
-                        )
-                        bank_lagging = False
-                        bank_synced_parts = len(seen_parts)
-                    elif (
-                        len(seen_parts) - bank_synced_parts
-                        >= max(cfg.bank_sync_every, 1)
-                    ):
-                        # amortized maintenance: fold the accumulated
-                        # un-synced parts in (one cogroup + publish) instead
-                        # of paying two bank jobs every wave
-                        unsynced = seen_parts[bank_synced_parts]
-                        for p in seen_parts[bank_synced_parts + 1 :]:
-                            unsynced = unsynced.unionByName(p)
-                        self.prefilter.add(
-                            unsynced, key_col=part_col, key_is_hash=slim
-                        )
-                        bank_synced_parts = len(seen_parts)
-                # misses are definite only w.r.t. the bank's synced prefix —
-                # the un-synced residual parts (plus this wave's redirect
-                # finals) backstop them exactly, co-partitioned so the chain
-                # adds no exchange
-                backstop = seen_parts[bank_synced_parts:] if engaged else []
-                if wave_finals is not None:
-                    backstop = backstop + [wave_finals]
-                wave_parts = seen_parts + (
-                    [wave_finals] if wave_finals is not None else []
-                )
-                fresh = reject_seen(
-                    fresh,
-                    seen,
-                    self.prefilter if engaged else None,
-                    seen_parts=wave_parts,
-                    miss_backstop=backstop,
-                    key_col=part_col,
-                )
+                # redirect finals
+                engaged = seen_tier.engaged(next_order)
+                fresh = seen_tier.reject(fresh, engaged, finals=wave_finals)
                 if use_edges:
                     # dictionary layout: everything upstream moved 8-byte
                     # keys; re-attach (link, host) to the ~|new links|
@@ -867,11 +782,12 @@ class SparkCrawler:
                 # materialize BEFORE ordering: the ordering shuffle would
                 # otherwise recompute the whole extract→dedup pipeline a
                 # second time each wave. When the bloom tier is engaged,
-                # reject_seen already checkpointed the flagged stream (its
-                # split needs it) — the residual filter/anti-join/union tail
-                # is cheap to rescan. Spans path: EAGER — bounded executor
-                # memory beats saving a job (lazy variants stacked python
-                # stages into one oversized job and OOM'd small executors).
+                # seen_tier.reject already checkpointed the flagged stream
+                # (its split needs it) — the residual filter/anti-join/union
+                # tail is cheap to rescan. Spans path: EAGER — bounded
+                # executor memory beats saving a job (lazy variants stacked
+                # python stages into one oversized job and OOM'd small
+                # executors).
                 # Edges path (round 6): LAZY — the pipeline is pure JVM
                 # joins/aggs, so the ordering bucket-count agg materializes
                 # the checkpoint inside its own job: one less serial job per
@@ -935,37 +851,11 @@ class SparkCrawler:
                 # new_frontier is checkpointed; the union tree over checkpointed
                 # parts is cheap to rescan — no per-wave seen re-materialization
                 seen = seen.unionByName(new_frontier.select("url"))
-                # append this wave's seen part (new links + redirect finals),
-                # pre-partitioned on the join key so future waves' anti-joins
-                # stream it with no exchange; compact the LSM when it grows.
+                # append this wave's seen part (new links + redirect finals).
                 # Slim mode: parts hold 8-byte keys — the per-wave part
                 # build, checkpoint and every future chain scan move ~6x
                 # fewer bytes than URL-string frames
-                part_src = new_frontier.select(
-                    F.xxhash64("url").alias("link_key")
-                    if slim
-                    else F.col("url").alias("link")
-                )
-                if wave_finals is not None:
-                    part_src = part_src.unionByName(wave_finals)
-                seen_parts.append(
-                    part_src.repartition(
-                        self._n_part, part_col
-                    ).localCheckpoint(eager=False)
-                )
-                if len(seen_parts) > 16:
-                    merged = seen_parts[0]
-                    for p in seen_parts[1:]:
-                        merged = merged.unionByName(p)
-                    seen_parts = [
-                        merged.repartition(
-                            self._n_part, part_col
-                        ).localCheckpoint(eager=False)
-                    ]
-                    # compaction renumbers the parts; the bank is re-synced
-                    # from the merged part at the next amortized sync (bloom
-                    # re-adds are idempotent)
-                    bank_synced_parts = 0
+                seen_tier.append(new_frontier, finals=wave_finals)
 
                 metrics.append(
                     {
@@ -1009,15 +899,6 @@ class SparkCrawler:
                             self.store.append_wave_metrics, metrics[-1]
                         )
                     )
-                    # the bank is the one commit input the NEXT wave
-                    # mutates: stage it synchronously at the boundary,
-                    # the pipeline adopts the staged dir by rename
-                    filters_dir = None
-                    if self.prefilter is not None:
-                        filters_dir = os.path.join(
-                            self.store.dir, f"_filters_stage-{wave:06d}"
-                        )
-                        self.prefilter.save(filters_dir)
                     committer.submit(
                         functools.partial(
                             self.store.commit_wave,
@@ -1038,14 +919,8 @@ class SparkCrawler:
                                 "next_order": next_order,
                                 "pages_counted": pages_counted,
                                 "extra_internal": extra_internal,
-                                # resume may trust the saved bank only if
-                                # it covers EVERY part (amortized
-                                # maintenance can lag)
-                                "bank_synced": (not bank_lagging)
-                                and bank_synced_parts >= len(seen_parts),
                             },
                             metrics=metrics[-1],
-                            filters_dir=filters_dir,
                         )
                     )
                 if limit_hit:

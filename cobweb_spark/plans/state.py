@@ -3,17 +3,28 @@
 The reference approximates exactly-once semantics with Redis locks and a
 WATCH/MULTI first-to-finish guard (``lib/crawl.rb:241-291``); restartable
 crawls reuse a fixed crawl_id (changelog 0.0.40). Here every completed
-wave commits ``(frontier, seen, pages, edges)`` — plus ``candidates`` when
-the crawl keeps inbound links — as parquet plus a manifest JSON written via
-atomic rename, through the single-worker ``CommitPipeline`` — the
-parquet+manifest stand-in for an Iceberg snapshot (same semantics: readers
-only see manifests, a torn write is invisible). A killed crawl resumes from
-the latest manifest and reproduces the exact remaining waves
+wave commits a snapshot through the single-worker ``CommitPipeline``: one
+directory ``wave=NNNNNN`` of parquet tables plus a manifest JSON, published
+by atomic rename — the parquet+manifest stand-in for an Iceberg snapshot
+(same semantics: readers only see manifests, a torn write is invisible).
+
+A snapshot holds:
+
+- ``frontier``: the queue the next wave admits from;
+- ``seen``: every URL enqueued so far, redirect finals included;
+- ``pages`` and ``edges``: this wave's fetches and enqueue edges (resume
+  reloads every wave's part);
+- ``candidates``: this wave's raw link stream, only when the crawl keeps
+  inbound links;
+- ``manifest.json``: the wave counters and per-partition lineage (row
+  counts per written partition, read from the parquet footers) per the
+  north rule.
+
+The seen filter bank is not part of it: it is derived state, rebuilt from
+``seen`` when a resumed crawl's probe tier first engages. A killed crawl
+resumes from the latest manifest and reproduces the exact remaining waves
 (deterministic ordering makes the final state identical to an
 uninterrupted run).
-
-Manifests carry the wave counters and per-partition lineage (row counts
-per written partition, read from the parquet footers) per the north rule.
 """
 
 from __future__ import annotations
@@ -105,12 +116,12 @@ class SnapshotStore:
         self.dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
         # staged-but-never-adopted scratch (a crash or failed async commit
-        # between stage and rename — round-6 advice) must not accumulate
-        # next to the wave dirs; committed state never lives under these
-        # prefixes, so removal is always safe at open time
+        # between stage and rename) must not accumulate next to the wave
+        # dirs; committed state never lives under these prefixes, so
+        # removal is always safe at open time
         for entry in os.listdir(state_dir):
             if entry.startswith(
-                ("_filters_stage-", "_run_tmp-", "_wm_tmp-", "_wl_tmp-")
+                ("_run_tmp-", "_wm_tmp-", "_wl_tmp-")
             ) or entry.endswith(".tmp"):
                 p = os.path.join(state_dir, entry)
                 (shutil.rmtree if os.path.isdir(p) else os.remove)(p)
@@ -128,11 +139,7 @@ class SnapshotStore:
         metrics: dict | None = None,
         edges: DataFrame | None = None,
         candidates: DataFrame | None = None,
-        filters_dir: str | None = None,
     ) -> str:
-        """``filters_dir``: adopt an already-staged bank directory by
-        rename — the bank is staged synchronously at the wave boundary
-        because the NEXT wave mutates it while this commit drains."""
         wdir = self._wave_dir(wave_id)
         tmp = wdir + ".tmp"
         if os.path.exists(tmp):
@@ -153,8 +160,6 @@ class SnapshotStore:
             path = os.path.join(tmp, name)
             df.write.mode("overwrite").parquet(path)
             lineage[name] = _file_lineage(path)
-        if filters_dir is not None:
-            os.rename(filters_dir, os.path.join(tmp, "filters"))
 
         manifest = {
             "wave_id": wave_id,
@@ -164,7 +169,6 @@ class SnapshotStore:
                 n: os.path.join(wdir, n) for n, df in tables.items() if df is not None
             },
             "lineage": lineage,
-            "has_filters": filters_dir is not None,
         }
         with open(os.path.join(tmp, "manifest.json"), "w") as f:
             json.dump(manifest, f)

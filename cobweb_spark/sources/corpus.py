@@ -15,6 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 from ..model import DOCUMENTS_SCHEMA, ROBOTS_SCHEMA
 from ..testkit import fixtures as fx
 
+# generated corpora cache in the checkout that holds this package (next to
+# ``__spark_entry__.CACHE``), so two checkouts never share one cache
+CACHE_DIR = os.path.join(
+    os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ),
+    ".cache_corpus",
+)
+
 
 def corpus_df(spark: SparkSession, corpus: dict) -> DataFrame:
     """In-memory OracleDoc corpus → documents DataFrame (tests)."""
@@ -33,7 +42,7 @@ def robots_df(spark: SparkSession, rules: list[tuple]) -> DataFrame:
 
 
 def cached_scale_corpus(
-    cache_dir: str = "/root/repo/.cache_corpus", **params
+    cache_dir: str = CACHE_DIR, **params
 ) -> tuple[str, list[str]]:
     """Generate (once) and cache the T4 scale corpus parquet; returns
     (path, seed_urls). Deterministic in params+seed."""

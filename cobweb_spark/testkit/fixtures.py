@@ -165,8 +165,11 @@ def build_sample_site_corpus(
 ) -> dict[str, OracleDoc]:
     """Spans corpus replicating SampleServer + Rack::Directory over
     spec/samples/sample_site: '/' serves index.html; every file is served
-    under its relative path; missing paths 404 (handled at fetch time)."""
+    under its relative path; missing paths 404 (handled at fetch time).
+    Raises FileNotFoundError when the sample site is absent."""
     root = os.path.join(samples_dir, "sample_site")
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"sample site directory not found: {root}")
     corpus: dict[str, OracleDoc] = {}
     for dirpath, _dirs, files in os.walk(root):
         for fname in sorted(files):

@@ -248,13 +248,23 @@ class TestJaccardGuard:
         assert guarded[("d3", "d4")] == round(2 / 3, 6)
 
 
+@pytest.fixture
+def stale_bank(monkeypatch):
+    """Bank maintenance effectively disabled: after the first sync the
+    bank never catches up with the seen parts."""
+    from cobweb_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "BANK_SYNC_EVERY", 99)
+
+
+@pytest.mark.usefixtures("stale_bank")
 class TestStaleBankBackstop:
     def test_never_synced_bank_full_parity(self, spark, sample_site_corpus):
         """Probe tier forced on from wave 0 with maintenance effectively
-        disabled (bank_sync_every huge): every candidate the stale bank
-        calls a definite miss must still be caught by the residual-part
-        backstop — exact order + seen parity."""
-        cfg = CrawlConfig(prefilter_min_seen=0, bank_sync_every=99)
+        disabled: every candidate the stale bank calls a definite miss
+        must still be caught by the residual-part backstop — exact order
+        + seen parity."""
+        cfg = CrawlConfig(prefilter_min_seen=0)
         docs = corpus_df(spark, sample_site_corpus)
         res = SparkCrawler(spark, docs, cfg).crawl(fx.SAMPLE_SITE_BASE)
         oracle = CrawlOracle(sample_site_corpus, cfg).crawl(
@@ -265,7 +275,7 @@ class TestStaleBankBackstop:
 
     def test_stale_bank_with_redirect_finals(self, spark):
         corpus = fx.build_seed_redirect_corpus()
-        cfg = CrawlConfig(prefilter_min_seen=0, bank_sync_every=99)
+        cfg = CrawlConfig(prefilter_min_seen=0)
         docs = corpus_df(spark, corpus)
         res = SparkCrawler(spark, docs, cfg).crawl(fx.SEED_REDIRECT_BASE)
         oracle = CrawlOracle(corpus, cfg).crawl(fx.SEED_REDIRECT_BASE)
@@ -275,35 +285,29 @@ class TestStaleBankBackstop:
 
 class TestSeenPartsEquivalence:
     def test_chained_parts_match_single_anti(self, spark):
-        from pyspark.sql import functions as F
-
-        from cobweb_spark.operators.dedup import reject_seen
+        """The anti-join chain over the per-wave parts rejects exactly
+        what one anti-join against the whole seen set would: the set
+        difference."""
+        from cobweb_spark.operators.dedup import SeenParts
 
         urls = [f"http://h{i % 5}.com/p{i}" for i in range(300)]
         cands = spark.createDataFrame(
             [(u, i) for i, u in enumerate(urls)], "link string, n int"
         )
         seen_urls = urls[:100] + urls[150:200]
-        seen = spark.createDataFrame([(u,) for u in seen_urls], "url string")
-        parts = [
-            spark.createDataFrame(
-                [(u,) for u in chunk], "link string"
-            )
-            .repartition(4, "link")
-            .localCheckpoint()
-            for chunk in (seen_urls[:60], seen_urls[60:110], seen_urls[110:])
-        ]
-        plain = {
-            r["link"] for r in reject_seen(cands, seen).collect()
-        }
+
+        def url_frame(chunk):
+            return spark.createDataFrame([(u,) for u in chunk], "url string")
+
+        tier = SeenParts(url_frame(seen_urls[:60]), 4, slim=False)
+        for chunk in (seen_urls[60:110], seen_urls[110:]):
+            tier.append(url_frame(chunk))
+        assert len(tier.parts) == 3
         chained = {
-            r["link"]
-            for r in reject_seen(
-                cands, seen, seen_parts=parts
-            ).collect()
+            r["link"] for r in tier.reject(cands, engaged=False).collect()
         }
-        assert chained == plain
-        assert len(plain) == 150
+        assert chained == set(urls) - set(seen_urls)
+        assert len(chained) == 150
 
 
 class TestMinuteRetention:

@@ -38,7 +38,6 @@ def _crawl_surface(spark, docs, seeds, **kw):
         seed_urls=seeds,
         store_inbound_links=False,
         precompute_edges=True,
-        use_seen_prefilter=True,
         prefilter_min_seen=500,
     )
     base.update(kw)
